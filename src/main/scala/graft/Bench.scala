@@ -33,7 +33,12 @@ object Bench {
         fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
-      val t = try { run(); Seq.fill(5)(run()).min } catch { case _: Throwable => -1.0 }
+      val t = try { run(); Seq.fill(5)(run()).min } catch {
+        case e: Throwable =>
+          // the ledger keeps its -1.0 sentinel; stderr says why
+          System.err.println(s"BENCH FAIL $name ${e.getClass.getName}: ${e.getMessage}")
+          -1.0
+      }
       name -> t
     }
     // round to ms: halves the line length (the round-1 driver failed to
@@ -63,7 +68,7 @@ object Bench {
     // what lands in BENCH_LOCAL.json, so the ledger format and every
     // cross-round comparison are unchanged.
     val compact =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","cpus":"$cpus","partitions":"$cpus","nqueries":${results.size},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","cpus":"$cpus","partitions":"$cpus","nqueries":${results.size},"nfailed":${results.size - ran.size},"sf":"$sfDir"}"""
     println(compact)
     // belt-and-braces: also leave the JSON in a file next to the repo.
     // Append-by-default JSONL: the round-7 driver bench (which doesn't set

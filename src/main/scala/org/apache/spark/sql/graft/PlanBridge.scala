@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
@@ -29,4 +30,9 @@ object PlanBridge {
     new org.apache.spark.sql.execution.SparkSqlParser()
   def vanillaParsePlan(text: String): LogicalPlan =
     vanillaParser.parsePlan(text)
+
+  /** Block until every event posted so far has reached every listener
+    * (`listenerBus` is `private[spark]`): how a listener-based job count
+    * reads a settled total instead of sleeping on the async bus. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * min over shingles of xxh64_mix(xxh64(shingle), seed = i).
   *
   * Each shingle's bytes are hashed ONCE (XXH64 over the UTF8 bytes); the
-  * per-seed family is a cheap 8-byte re-mix — versus the HOF formulation
-  * (`Dedup.minHashSignatureHof`) which re-hashes every shingle string
+  * per-seed family is a cheap 8-byte re-mix — versus a higher-order
+  * `transform` formulation, which would re-hash every shingle string
   * once per seed through an interpreted lambda. One fused codegen loop,
   * numHashes × |shingles| long-mixes instead of string hashes.
   */

@@ -474,7 +474,7 @@ object SnapshotTable {
     manifestDir(dir).resolve(f"v$v%08d.ckindex")
 
   /** Entries parsed by the LAST bounded-candidate resolution on this
-    * JVM — the observable the two-tier Stress probe and specs assert
+    * JVM — the observable the two-tier pruning specs assert
     * (wall clock alone cannot separate manifest-parse cost from Spark
     * overhead). -1 until the first bounded read. */
   private[pystreamsspark] val lastPruneParsed =
@@ -4834,15 +4834,20 @@ object SnapshotTable {
     // against brute-force exceptAll in SnapshotCdcSpec) — at half the
     // scans and half the shuffles.
     val dataCols = o.columns.toSeq
-    val net = o.withColumn("__w", lit(-1L))
-      .unionByName(n.withColumn("__w", lit(1L)))
+    // working columns take names no data column has (case-insensitively,
+    // as the analyzer resolves), so a user column `__w` is never overwritten
+    def unused(base: String): String = Iterator.iterate(base)(_ + "_")
+      .find(c => !dataCols.exists(_.equalsIgnoreCase(c))).get
+    val (w, d, r) = (unused("__w"), unused("__d"), unused("__r"))
+    val net = o.withColumn(w, lit(-1L))
+      .unionByName(n.withColumn(w, lit(1L)))
       .groupBy(dataCols.map(col): _*)
-      .agg(sum(col("__w")).as("__d"))
-      .filter(col("__d") =!= 0L)
+      .agg(sum(col(w)).as(d))
+      .filter(col(d) =!= 0L)
     net
       .withColumn("_change_type",
-        when(col("__d") > 0L, lit("insert")).otherwise(lit("delete")))
-      .withColumn("__r", explode(sequence(lit(1L), abs(col("__d")))))
+        when(col(d) > 0L, lit("insert")).otherwise(lit("delete")))
+      .withColumn(r, explode(sequence(lit(1L), abs(col(d)))))
       .select(dataCols.map(col) :+ col("_change_type"): _*)
   }
 }

@@ -56,7 +56,7 @@ object Contamination {
     // gram materializes every occurrence of the top gram in ONE task
     // before filtering, exactly the hot-task the df cap exists to
     // prevent; at corpus scale that task is billions of rows and the
-    // two-pass form wins outright (tools/Stress plants such a gram).
+    // two-pass form wins outright (SCALE.md: the hot-gram probe).
     val banned = trainGrams
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)

@@ -104,13 +104,6 @@ object Dedup {
   def minHashSignature(shingleCol: Column, numHashes: Int = 32): Column =
     call_function("minhash_sig", shingleCol, lit(numHashes))
 
-  /** HOF formulation of the signature (session-free, interpreted) — kept
-    * for property tests and as the portable reference implementation. */
-  def minHashSignatureHof(shingleCol: Column, numHashes: Int = 32): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      s => array_min(transform(shingleCol, sh => xxhash64(sh, s))))
-
   /** LSH band keys: signature split into `bands` bands of
     * numHashes/bands rows each; each band hashed to one bucket key.
     * Two docs collide in a band iff that band of their signatures is

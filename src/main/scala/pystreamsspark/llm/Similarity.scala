@@ -518,7 +518,7 @@ object Similarity {
     * (2^nbits codes per slot, trained by the deterministic L2 Lloyd
     * fit), so the candidate scan of a probe reads `m` SMALL INTEGERS
     * per vector — at 100 TB the codes table is ~dim·4/m bytes-fold
-    * smaller than the raw float corpus (the Stress row measures the
+    * smaller than the raw float corpus (SCALE.md records the measured
     * ratio), and raw vectors are touched only for the final exact
     * re-rank short-list. Artifacts land beside the index:
     * `dir/pq_codebook` (slot, code, cvec, c2) and `dir/pq_codes`
@@ -637,7 +637,7 @@ object Similarity {
     * sqrt(Σ_slot |code-centroid|²) — both sums are per-candidate
     * zip_with/aggregate HOFs over the m-length code array against the
     * probe's LUT, no explode of the candidate set. At 100 TB the
-    * candidate I/O is the CODES table (≫ smaller; Stress-measured) and
+    * candidate I/O is the CODES table (≫ smaller; measured in SCALE.md) and
     * raw-vector I/O is the short-list's covering files only. */
   def ivfPqQuery(spark: org.apache.spark.sql.SparkSession, dir: String,
                  idCol: String, vecCol: String, probes: DataFrame,

@@ -64,8 +64,9 @@ object AsofJoin {
     val unioned = lSel.unionByName(rAligned)
     // time-as-number for distance arithmetic (nearest chooser, tolerance
     // cutoff): epoch micros for timestamps (int64-exact), double cast
-    // otherwise — identical on the native-exec side (AsofJoinExec
-    // .timeAsDouble) and replayable verbatim by a DuckDB oracle
+    // otherwise — identical on the broadcast-exec side
+    // (BroadcastAsofJoinExec.timeAsDouble) and replayable verbatim by a
+    // DuckDB oracle
     def micros(c: org.apache.spark.sql.Column) =
       if (unioned.schema("__t").dataType ==
           org.apache.spark.sql.types.TimestampType) unix_micros(c)

@@ -5,20 +5,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import pystreamsspark.plans.{AsofJoinPlan, AsofJoinStrategy}
 
-/** Facade over the native as-of join operator
-  * ([[pystreamsspark.plans.AsofJoinExec]]) with the same signature and
-  * byte-identical semantics as [[AsofJoin.asofJoin]]'s union+window
-  * formulation — all three directions (backward / forward / nearest)
-  * and the optional `tolerance` distance cutoff. Nearest costs nothing
-  * extra in the merge: the right-side head the backward merge stops on
-  * IS the forward candidate (smallest time > lt, smallest tie-break
-  * tuple), so the chooser runs on O(1) state with no second carry.
-  *
-  * `broadcast = true` plans [[pystreamsspark.plans.BroadcastAsofJoinExec]]
-  * instead: the right side broadcasts and every probe is a per-key
-  * binary search — zero exchanges and zero sorts on the (big) left
-  * side. Use it whenever the right side is a small dimension timeline;
-  * the sort-merge form remains the default for same-scale sides.
+/** Facade over the native broadcast as-of join operator
+  * ([[pystreamsspark.plans.BroadcastAsofJoinExec]]) with the same
+  * signature and byte-identical semantics as [[AsofJoin.asofJoin]]'s
+  * union+window formulation — all three directions (backward / forward
+  * / nearest) and the optional `tolerance` distance cutoff. The right
+  * side broadcasts and every probe is a per-key binary search — zero
+  * exchanges and zero sorts on the (big) left side. Use it when the
+  * right side is a small dimension timeline; for same-scale sides use
+  * the window formulation.
   *
   * The right side is re-projected through fresh aliases before the plan
   * is built: that (a) mints new expression IDs so `left` and `right`
@@ -36,8 +31,7 @@ object NativeAsof {
       valueCols: Seq[String],
       prefix: String = "asof_",
       direction: String = "backward",
-      tolerance: Option[Double] = None,
-      broadcast: Boolean = false): DataFrame = {
+      tolerance: Option[Double] = None): DataFrame = {
     require(by.nonEmpty, "native as-of join needs at least one by-key")
     val (forward, nearest) = direction match {
       case "backward" => (false, false)
@@ -70,8 +64,7 @@ object NativeAsof {
       rightTieBreak = valueCols.map(c => attr(rPlan, s"$prefix$c")),
       forward = forward,
       nearest = nearest,
-      tolerance = tolerance,
-      broadcast = broadcast)
+      tolerance = tolerance)
     PlanBridge.ofRows(spark, node)
       .select((left.columns.toSeq ++ valueCols.map(c => s"$prefix$c")).map(col): _*)
   }
@@ -127,7 +120,6 @@ object NativeAsof {
       forward = false,
       nearest = false,
       tolerance = None,
-      broadcast = true,
       emitBoth = true,
       fwdOutput = fwdAttrs)
     val joined = PlanBridge.ofRows(spark, node)

@@ -1,47 +1,35 @@
 package pystreamsspark.plans
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Native as-of join — the whole-operator extension tier of SURVEY §2.9:
   * a custom logical node, planned by [[AsofJoinStrategy]] into
-  * [[AsofJoinExec]], a true physical operator with its own distribution
-  * and ordering requirements (so EnsureRequirements inserts exactly the
-  * shuffles/sorts a sort-merge join would get) and a streaming
-  * per-partition merge in `doExecute`.
+  * [[BroadcastAsofJoinExec]], a true physical operator that broadcasts
+  * the right side and answers every left row with a per-key binary
+  * search, so the (big) left side keeps its partitioning and ordering.
   *
   * Semantics (identical to [[pystreamsspark.operators.AsofJoin]]'s
-  * union+window formulation, which stays as the pure-DataFrame path):
-  * every left row is emitted exactly once, joined to the nearest right
-  * row with equal `by` keys and
+  * union+window formulation, which stays the path for same-scale
+  * sides): every left row is emitted exactly once, joined to the
+  * nearest right row with equal `by` keys and
   *   - backward: the greatest `rightTime <= leftTime`;
   *   - forward:  the smallest `rightTime >= leftTime`;
-  * or all-null right columns when no such row exists. Among right rows
-  * tied on (keys, time), the greatest `rightTieBreak` tuple wins — the
-  * same deterministic rule the window formulation and the DuckDB oracle
-  * replay, so all three produce byte-identical output. Nulls follow the
-  * window formulation's sort-defined behavior exactly: null keys group
-  * together (as PARTITION BY does) and a null time sorts as -infinity.
+  *   - nearest:  whichever of the two is closer, ties going backward;
+  * or all-null right columns when no such row exists (or, with a
+  * `tolerance`, when the match lies farther away than it). Among right
+  * rows tied on (keys, time), the greatest `rightTieBreak` tuple wins —
+  * the same deterministic rule the window formulation and the DuckDB
+  * oracle replay, so all three produce byte-identical output. Nulls
+  * follow the window formulation's sort-defined behavior exactly: null
+  * keys group together (as PARTITION BY does) and a null time sorts as
+  * -infinity.
   *
   * Output = left.output ++ right.output (right side nullable) — the
   * facade [[pystreamsspark.operators.NativeAsof]] pre-renames the right
   * side to fresh, collision-free attributes (also making self-joins
   * safe) and projects the user-facing columns on top.
-  *
-  * Scale: cost is one hash shuffle per side on the `by` keys plus one
-  * in-partition sort each — byte-for-byte the asymptotics of a
-  * sort-merge join. The merge itself is O(|L|+|R|) per partition with
-  * O(1) state (a single carried right row), so a 1000-executor cluster
-  * runs it exactly like SMJ: no broadcast, no windows, no per-key
-  * buffering, skew bounded by the key distribution itself.
   */
 case class AsofJoinPlan(
     left: LogicalPlan,
@@ -54,7 +42,6 @@ case class AsofJoinPlan(
     forward: Boolean,
     nearest: Boolean = false,
     tolerance: Option[Double] = None,
-    broadcast: Boolean = false,
     // both-neighbor mode (interpolation joins): emit BOTH the backward
     // neighbor (greatest time <= leftTime, greatest tie) and the forward
     // neighbor (smallest time > leftTime, smallest tie) per left row.
@@ -64,8 +51,6 @@ case class AsofJoinPlan(
     emitBoth: Boolean = false,
     fwdOutput: Seq[Attribute] = Nil) extends BinaryNode {
 
-  require(!emitBoth || broadcast,
-    "both-neighbor (interpolation) mode is implemented on the broadcast exec")
   require(!emitBoth || fwdOutput.length == right.output.length,
     "emitBoth needs one fwdOutput attribute per right column")
 
@@ -75,11 +60,11 @@ case class AsofJoinPlan(
     s"as-of key types differ: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
   require(leftTime.dataType == rightTime.dataType,
     s"as-of time types differ: ${leftTime.dataType} vs ${rightTime.dataType}")
-  require(!(nearest && forward), "nearest uses the ascending merge; forward must be false")
+  require(!(nearest && forward), "nearest searches both ways; forward must be false")
   // nearest / tolerance do distance arithmetic, so the time column must
   // be a time-or-numeric type (same contract as the window formulation,
   // which casts non-timestamps to double)
-  if (nearest || tolerance.isDefined) AsofJoinExec.timeAsDouble(leftTime.dataType)
+  if (nearest || tolerance.isDefined) BroadcastAsofJoinExec.timeAsDouble(leftTime.dataType)
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true)) ++
@@ -102,514 +87,17 @@ case class AsofJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinPlan]] → [[AsofJoinExec]]. Inject per-session via
+/** Plans [[AsofJoinPlan]] → [[BroadcastAsofJoinExec]]. Inject per-session via
   * `spark.experimental.extraStrategies` (the facade does this lazily)
   * or globally through [[pystreamsspark.GraftExtensions]].
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsofJoinPlan =>
-      if (p.broadcast)
-        BroadcastAsofJoinExec(p.leftKeys, p.rightKeys, p.leftTime, p.rightTime,
-          p.rightTieBreak, p.forward, p.nearest, p.tolerance,
-          p.emitBoth, p.fwdOutput,
-          planLater(p.left), planLater(p.right)) :: Nil
-      else
-        AsofJoinExec(p.leftKeys, p.rightKeys, p.leftTime, p.rightTime,
-          p.rightTieBreak, p.forward, p.nearest, p.tolerance,
-          planLater(p.left), planLater(p.right)) :: Nil
+      BroadcastAsofJoinExec(p.leftKeys, p.rightKeys, p.leftTime, p.rightTime,
+        p.rightTieBreak, p.forward, p.nearest, p.tolerance,
+        p.emitBoth, p.fwdOutput,
+        planLater(p.left), planLater(p.right)) :: Nil
     case _ => Nil
   }
-}
-
-/** Sort-merge as-of join.
-  *
-  * Requires both children clustered on the join keys (one shuffle per
-  * side, exactly like SortMergeJoinExec) and sorted by (keys ASC,
-  * time ASC|DESC, [right: tieBreak ASC]) — time DESCENDS for the
-  * forward direction so the merge below is direction-agnostic: in
-  * stream order, the carry always holds the latest right row at-or-
-  * before the current left row, which is the nearest-≤ (backward) or
-  * nearest-≥ (forward) match.
-  */
-case class AsofJoinExec(
-    leftKeys: Seq[Expression],
-    rightKeys: Seq[Expression],
-    leftTime: Expression,
-    rightTime: Expression,
-    rightTieBreak: Seq[Expression],
-    forward: Boolean,
-    nearest: Boolean,
-    tolerance: Option[Double],
-    left: SparkPlan,
-    right: SparkPlan) extends BinaryExecNode with CodegenSupport {
-
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
-
-  override lazy val metrics = Map(
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "numMatched" -> SQLMetrics.createMetric(sparkContext, "number of matched left rows"))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
-
-  private def timeDir = if (forward) Descending else Ascending
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    leftKeys.map(k => SortOrder(k, Ascending)) :+ SortOrder(leftTime, timeDir),
-    rightKeys.map(k => SortOrder(k, Ascending)) ++
-      (SortOrder(rightTime, timeDir) +:
-        rightTieBreak.filter(e => RowOrdering.isOrderable(e.dataType))
-          .map(e => SortOrder(e, Ascending))))
-
-  // left rows pass through in order, so partitioning and ordering of
-  // the left child survive — a downstream agg/join on the same keys
-  // re-uses the exchange
-  override def outputPartitioning: Partitioning = left.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = requiredChildOrdering.head
-
-  protected override def doExecute(): RDD[InternalRow] = {
-    val numOutputRows = longMetric("numOutputRows")
-    val numMatched = longMetric("numMatched")
-    val fwd = forward
-    val near = nearest
-    val tol = tolerance
-    val lOut = left.output
-    val rOut = right.output
-    val allOut = output
-    val lKeyExprs = leftKeys
-    val rKeyExprs = rightKeys
-    val lTimeExpr = leftTime
-    val rTimeExpr = rightTime
-    // distance accessor, only materialized when nearest/tolerance needs
-    // arithmetic — plain directional joins keep working on ANY orderable
-    // time type (strings, decimals)
-    val tGet: (InternalRow, Int) => Double =
-      if (near || tol.isDefined) AsofJoinExec.timeAsDouble(leftTime.dataType) else null
-
-    val nKeys = leftKeys.size
-
-    left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      // ONE combined [keys..., time] projection per side per row (jstack
-      // profiling showed separate key/time projections + per-row metric
-      // adds dominating the merge) and codegen'd orderings over BOUND
-      // references into the combined layout: keyOrd compares the key
-      // prefix, timeOrd the time slot — both null-aware exactly like the
-      // sort, so null keys group together (as PARTITION BY does) and a
-      // null time sorts as -infinity, matching the window formulation.
-      val lKtProj = UnsafeProjection.create(lKeyExprs :+ lTimeExpr, lOut)
-      val rKtProj = UnsafeProjection.create(rKeyExprs :+ rTimeExpr, rOut)
-      val ktTypes = (lKeyExprs :+ lTimeExpr).map(_.dataType)
-      val keyOrd = codegen.GenerateOrdering.generate(
-        (0 until nKeys).map(i =>
-          SortOrder(BoundReference(i, ktTypes(i), nullable = true), Ascending)))
-      val timeOrd = codegen.GenerateOrdering.generate(Seq(
-        SortOrder(BoundReference(nKeys, ktTypes(nKeys), nullable = true), Ascending)))
-      // bind the right half as NULLABLE regardless of the child schema:
-      // unmatched left rows are padded with an all-null right row, so the
-      // bound references must null-check even formerly non-null columns
-      val outProj =
-        UnsafeProjection.create(allOut, lOut ++ rOut.map(_.withNullability(true)))
-      val nullRight = new GenericInternalRow(rOut.size)
-      val joined = new JoinedRow
-      // batch the SQL metrics: per-row SQLMetric.+= measurably hot
-      var outRows = 0L
-      var matched = 0L
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit] { _ =>
-          numOutputRows += outRows; numMatched += matched
-        })
-
-      new Iterator[InternalRow] {
-        // single-row lookahead on the right + one carried candidate:
-        // O(1) state regardless of partition size. The carry is copied
-        // into a REUSED buffer (UnsafeRow.copyFrom), so the merge
-        // allocates nothing per row.
-        // copyFrom REQUIRES a byte[]-backed row (it asserts, but asserts
-        // are off at runtime and a bufferless row segfaults copyMemory),
-        // so seed a real buffer; copyFrom grows it as needed
-        private val carryBuf = new UnsafeRow(rOut.size)
-        carryBuf.pointTo(new Array[Byte](64), 64)
-        private var carry: InternalRow = null
-        // the carried row's time, captured at consume time off rKt —
-        // nearest's distance chooser and tolerance's cutoff read it
-        // without re-projecting the carry
-        private var carryTimeNull = true
-        private var carryTime = 0.0
-        private var prevLeftKt: UnsafeRow = null
-
-        // project the right head's [keys, time] ONCE per advance, not
-        // once per left row it stalls in front of: the projection's
-        // result buffer stays valid exactly until its next invocation,
-        // which is the next advance
-        private var rHead: InternalRow = null
-        private var rKt: UnsafeRow = null
-
-        private def advanceRight(): Unit =
-          if (rIter.hasNext) {
-            rHead = rIter.next()
-            rKt = rKtProj(rHead)
-          } else rHead = null
-        advanceRight()
-
-        override def hasNext: Boolean = lIter.hasNext
-
-        override def next(): InternalRow = {
-          val l = lIter.next()
-          outRows += 1
-          val lKt = lKtProj(l)
-          if (prevLeftKt == null || keyOrd.compare(lKt, prevLeftKt) != 0) {
-            carry = null // the carry belonged to the previous key group
-            carryTimeNull = true
-            prevLeftKt = lKt.copy()
-          }
-          var stop = false
-          while (!stop && rHead != null) {
-            val kc = keyOrd.compare(rKt, lKt)
-            if (kc > 0) stop = true
-            else if (kc < 0) advanceRight() // right key already passed: drop
-            else {
-              val c0 = timeOrd.compare(rKt, lKt)
-              if ((if (fwd) -c0 else c0) <= 0) {
-                // last consumed wins: ties resolve to the greatest
-                // tieBreak tuple
-                rHead match {
-                  case u: UnsafeRow => carryBuf.copyFrom(u); carry = carryBuf
-                  case other => carry = other.copy()
-                }
-                carryTimeNull = rKt.isNullAt(nKeys)
-                if (!carryTimeNull && tGet != null) carryTime = tGet(rKt, nKeys)
-                advanceRight()
-              } else stop = true
-            }
-          }
-          if (!near) {
-            // tolerance: a null-time carry or a null left time has no
-            // defined distance → no match (same null algebra as the
-            // window formulation's `when(abs(t - ct) <= tol, v)`)
-            val ok = carry != null && (tol.isEmpty ||
-              (!carryTimeNull && !lKt.isNullAt(nKeys) &&
-                math.abs(tGet(lKt, nKeys) - carryTime) <= tol.get))
-            if (ok) { matched += 1; outProj(joined(l, carry)) }
-            else outProj(joined(l, nullRight))
-          } else {
-            // nearest: the stopped right head IS the forward candidate —
-            // smallest time > lt, smallest tieBreak tuple (first in sort
-            // order), exactly the window formulation's `first()` carry.
-            // Chooser replicates its null algebra: no forward → backward
-            // (even a null-time carry's values); forward exists and the
-            // backward side has no defined distance → forward; both
-            // timed → integer-exact distance compare, ties backward.
-            val ltNull = lKt.isNullAt(nKeys)
-            val lt = if (ltNull) 0.0 else tGet(lKt, nKeys)
-            // a same-key stopped head always has a non-null time (null
-            // times sort first and get consumed) — the null check is
-            // belt-and-braces, mirrored in the generated code
-            val fwdKeyOk = rHead != null && !rKt.isNullAt(nKeys) &&
-              keyOrd.compare(rKt, lKt) == 0
-            val ft = if (fwdKeyOk) tGet(rKt, nKeys) else 0.0
-            val fwdOk = fwdKeyOk &&
-              (tol.isEmpty || (!ltNull && (ft - lt) <= tol.get))
-            val backOk = carry != null && (tol.isEmpty ||
-              (!ltNull && !carryTimeNull && (lt - carryTime) <= tol.get))
-            val takeFwd = fwdOk && !(backOk && !carryTimeNull && !ltNull &&
-              (lt - carryTime) <= (ft - lt))
-            if (takeFwd) { matched += 1; outProj(joined(l, rHead)) }
-            else if (backOk) { matched += 1; outProj(joined(l, carry)) }
-            else outProj(joined(l, nullRight))
-          }
-        }
-      }
-    }
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: SparkPlan, newRight: SparkPlan): AsofJoinExec =
-    copy(left = newLeft, right = newRight)
-
-  // ---------------------------------------------------------------- codegen
-  // Whole-stage codegen (SMJ-style two-input produce node): the merge
-  // loop compiles into the stage's processNext, so the per-row costs the
-  // interpreted path pays at the codegen boundary (virtual iterator
-  // calls, projection objects, metric adds) fuse into straight-line
-  // Java. Children feed through inputRDDs() exactly like
-  // SortMergeJoinExec; the interpreted doExecute above stays as the
-  // spark.sql.codegen.wholeStage=false / fallback path and as the
-  // executable specification the generated code must match
-  // (NativeAsofSpec runs both).
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.execute() :: right.execute() :: Nil
-
-  override def needCopyResult: Boolean = true
-
-  /** nulls-first three-way compare of one field, shared by key and time
-    * comparisons so null semantics stay identical to the sort's. */
-  private def genFieldComp(
-      ctx: CodegenContext, dt: DataType, target: String,
-      lNull: String, lVal: String, rNull: String, rVal: String): String =
-    s"""if ($rNull) { $target = $lNull ? 0 : -1; }
-       |else if ($lNull) { $target = 1; }
-       |else { $target = ${ctx.genComp(dt, rVal, lVal)}; }""".stripMargin
-
-  override protected def doProduce(ctx: CodegenContext): String = {
-    val numOutput = metricTerm(ctx, "numOutputRows")
-    val numMatched = metricTerm(ctx, "numMatched")
-    val leftInput = ctx.addMutableState("scala.collection.Iterator", "leftInput",
-      v => s"$v = inputs[0];", forceInline = true)
-    val rightInput = ctx.addMutableState("scala.collection.Iterator", "rightInput",
-      v => s"$v = inputs[1];", forceInline = true)
-    val rightRow = ctx.addMutableState("InternalRow", "asofRightRow", forceInline = true)
-    val rightInit = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofRightInit",
-      forceInline = true)
-    val carryValid = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofCarryValid",
-      forceInline = true)
-    val hasPrev = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofHasPrev",
-      forceInline = true)
-    val unsafeRowCls = classOf[UnsafeRow].getName
-    val carryBuf = ctx.addMutableState(unsafeRowCls, "asofCarryBuf",
-      v => s"$v = new $unsafeRowCls(${right.output.size}); $v.pointTo(new byte[64], 64);",
-      forceInline = true)
-
-    val fetchRight = ctx.freshName("asofFetchRight")
-    ctx.addNewFunction(fetchRight,
-      s"""private void $fetchRight() {
-         |  $rightRow = $rightInput.hasNext() ? (InternalRow) $rightInput.next() : null;
-         |}""".stripMargin)
-
-    // left key/time: evaluated once per left row into locals
-    val leftRow = ctx.freshName("asofLeftRow")
-    ctx.INPUT_ROW = leftRow
-    ctx.currentVars = null
-    val lKeyVars = leftKeys.map(
-      BindReferences.bindReference(_, left.output).genCode(ctx))
-    val lTimeVar = BindReferences.bindReference(leftTime, left.output).genCode(ctx)
-
-    // right key/time: re-evaluated per advance-loop iteration straight
-    // off the buffered head row (field accessors — no copies needed, the
-    // head row object stays alive exactly while it is compared)
-    ctx.INPUT_ROW = rightRow
-    val rKeyVars = rightKeys.map(
-      BindReferences.bindReference(_, right.output).genCode(ctx))
-    val rTimeVar = BindReferences.bindReference(rightTime, right.output).genCode(ctx)
-
-    // previous left key: per-field buffered copies (addBufferedState
-    // clones buffer-backed values such as UTF8String) + null flags
-    val prevNulls = leftKeys.map(_ =>
-      ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofPrevNull", forceInline = true))
-    val prevVals = leftKeys.zip(lKeyVars).map { case (k, v) =>
-      ctx.addBufferedState(k.dataType, "asofPrevVal", v.value.toString)
-    }
-
-    val keyChanged = ctx.freshName("asofKeyChanged")
-    val changedChecks = leftKeys.indices.map { i =>
-      val dt = leftKeys(i).dataType
-      s"""if (!$keyChanged) {
-         |  if (${lKeyVars(i).isNull} != ${prevNulls(i)}) $keyChanged = true;
-         |  else if (!${lKeyVars(i).isNull} &&
-         |    ${ctx.genComp(dt, lKeyVars(i).value.toString, prevVals(i).value.toString)} != 0) $keyChanged = true;
-         |}""".stripMargin
-    }.mkString("\n")
-    val copyPrev = leftKeys.indices.map { i =>
-      s"""${prevNulls(i)} = ${lKeyVars(i).isNull};
-         |if (!${lKeyVars(i).isNull}) { ${prevVals(i).code} }""".stripMargin
-    }.mkString("\n")
-
-    val kc = ctx.freshName("asofKc")
-    val kcChecks = leftKeys.indices.map { i =>
-      s"""if ($kc == 0) {
-         |  ${genFieldComp(ctx, leftKeys(i).dataType, kc,
-              lKeyVars(i).isNull.toString, lKeyVars(i).value.toString,
-              rKeyVars(i).isNull.toString, rKeyVars(i).value.toString)}
-         |}""".stripMargin
-    }.mkString("\n")
-    val tc = ctx.freshName("asofTc")
-    val tcCheck = genFieldComp(ctx, leftTime.dataType, tc,
-      lTimeVar.isNull.toString, lTimeVar.value.toString,
-      rTimeVar.isNull.toString, rTimeVar.value.toString)
-    val tcFinal = if (forward) s"$tc = -$tc;" else ""
-
-    // nearest / tolerance state: the carried row's time as a double,
-    // captured at consume time while rTimeVar is in scope (same
-    // timeAsDouble contract as the interpreted path — exact for epoch
-    // micros « 2^53)
-    val hasDist = nearest || tolerance.isDefined
-    val ctNull = if (hasDist)
-      ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "asofCtNull", forceInline = true)
-    else ""
-    val ct = if (hasDist)
-      ctx.addMutableState(CodeGenerator.JAVA_DOUBLE, "asofCt", forceInline = true)
-    else ""
-    val captureCt = if (hasDist)
-      s"""$ctNull = ${rTimeVar.isNull};
-         |if (!$ctNull) $ct = (double)(${rTimeVar.value});""".stripMargin
-    else ""
-    val resetCt = if (hasDist) s"$ctNull = true;" else ""
-    val ltNull = ctx.freshName("asofLtNull")
-    val lt = ctx.freshName("asofLt")
-    val ltDecl = if (hasDist)
-      s"""boolean $ltNull = ${lTimeVar.isNull};
-         |double $lt = $ltNull ? 0.0 : (double)(${lTimeVar.value});""".stripMargin
-    else ""
-
-    // nearest's forward candidate: the stopped right head, re-evaluated
-    // post-loop through a SECOND set of bound accessors (fresh names)
-    ctx.INPUT_ROW = rightRow
-    val rKeyVars2 = if (nearest) rightKeys.map(
-      BindReferences.bindReference(_, right.output).genCode(ctx)) else Nil
-    val rTimeVar2 = if (nearest)
-      BindReferences.bindReference(rightTime, right.output).genCode(ctx) else null
-
-    // output: left columns straight off the left row, right columns off
-    // the carry buffer (or, for nearest, the forward head) guarded by
-    // the mode's matched condition
-    ctx.INPUT_ROW = leftRow
-    val leftOutVars = left.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    def carryOutVars(guard: String) = right.output.zipWithIndex.map { case (a, i) =>
-      val isNull = ctx.freshName("asofRNull")
-      val value = ctx.freshName("asofRVal")
-      val jt = CodeGenerator.javaType(a.dataType)
-      val getV = CodeGenerator.getValue(carryBuf, a.dataType, i.toString)
-      val c =
-        code"""boolean $isNull = !$guard || $carryBuf.isNullAt($i);
-              |$jt $value = $isNull ? ${CodeGenerator.defaultValue(a.dataType)} : ($getV);"""
-      ExprCode(c, JavaCode.isNullVariable(isNull), JavaCode.variable(value, a.dataType))
-    }
-
-    val okVar = ctx.freshName("asofOk")
-    val takeFwd = ctx.freshName("asofTakeFwd")
-    val backOk = ctx.freshName("asofBackOk")
-    val fwdOk = ctx.freshName("asofFwdOk")
-    val ftVar = ctx.freshName("asofFt")
-    val kc2 = ctx.freshName("asofKc2")
-    // splice the tolerance as a bit-exact literal — a raw toString would
-    // generate uncompilable Java for Infinity/NaN sentinels
-    def tolLit(t: Double): String =
-      s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToLongBits(t)}L)"
-
-    val (postLoop, matchedCond, rightOutVars) =
-      if (nearest) {
-        val tolB = tolerance.map(t =>
-          s" && !$ltNull && !$ctNull && ($lt - $ct) <= ${tolLit(t)}").getOrElse("")
-        val tolF = tolerance.map(t =>
-          s" && !$ltNull && ($ftVar - $lt) <= ${tolLit(t)}").getOrElse("")
-        val kc2Checks = leftKeys.indices.map { i =>
-          s"""if ($kc2 == 0) {
-             |  ${genFieldComp(ctx, leftKeys(i).dataType, kc2,
-                  lKeyVars(i).isNull.toString, lKeyVars(i).value.toString,
-                  rKeyVars2(i).isNull.toString, rKeyVars2(i).value.toString)}
-             |}""".stripMargin
-        }.mkString("\n")
-        val block =
-          s"""boolean $fwdOk = false;
-             |double $ftVar = 0.0;
-             |if ($rightRow != null) {
-             |  ${rKeyVars2.map(_.code).mkString("\n")}
-             |  int $kc2 = 0;
-             |  $kc2Checks
-             |  if ($kc2 == 0) {
-             |    ${rTimeVar2.code}
-             |    if (!${rTimeVar2.isNull}) {
-             |      $ftVar = (double)(${rTimeVar2.value});
-             |      $fwdOk = true$tolF;
-             |    }
-             |  }
-             |}
-             |boolean $backOk = $carryValid$tolB;
-             |boolean $takeFwd = $fwdOk &&
-             |  !($backOk && !$ctNull && !$ltNull && ($lt - $ct) <= ($ftVar - $lt));""".stripMargin
-        val outVars = right.output.zipWithIndex.map { case (a, i) =>
-          val isNull = ctx.freshName("asofRNull")
-          val value = ctx.freshName("asofRVal")
-          val jt = CodeGenerator.javaType(a.dataType)
-          val getCarry = CodeGenerator.getValue(carryBuf, a.dataType, i.toString)
-          val getFwd = CodeGenerator.getValue(rightRow, a.dataType, i.toString)
-          val c =
-            code"""boolean $isNull = true;
-                  |$jt $value = ${CodeGenerator.defaultValue(a.dataType)};
-                  |if ($takeFwd) {
-                  |  $isNull = $rightRow.isNullAt($i);
-                  |  if (!$isNull) $value = ($getFwd);
-                  |} else if ($backOk) {
-                  |  $isNull = $carryBuf.isNullAt($i);
-                  |  if (!$isNull) $value = ($getCarry);
-                  |}"""
-          ExprCode(c, JavaCode.isNullVariable(isNull), JavaCode.variable(value, a.dataType))
-        }
-        (block, s"($takeFwd || $backOk)", outVars)
-      } else tolerance match {
-        case Some(t) =>
-          val block =
-            s"""boolean $okVar = $carryValid && !$ltNull && !$ctNull &&
-               |  Math.abs($lt - $ct) <= ${tolLit(t)};""".stripMargin
-          (block, okVar, carryOutVars(okVar))
-        case None => ("", carryValid, carryOutVars(carryValid))
-      }
-
-    val stop = ctx.freshName("asofStop")
-    s"""if (!$rightInit) { $rightInit = true; $fetchRight(); }
-       |while ($leftInput.hasNext()) {
-       |  InternalRow $leftRow = (InternalRow) $leftInput.next();
-       |  ${lKeyVars.map(_.code).mkString("\n")}
-       |  ${lTimeVar.code}
-       |  $ltDecl
-       |  boolean $keyChanged = !$hasPrev;
-       |  $changedChecks
-       |  if ($keyChanged) {
-       |    $carryValid = false;
-       |    $resetCt
-       |    $hasPrev = true;
-       |    $copyPrev
-       |  }
-       |  boolean $stop = false;
-       |  while (!$stop && $rightRow != null) {
-       |    ${rKeyVars.map(_.code).mkString("\n")}
-       |    int $kc = 0;
-       |    $kcChecks
-       |    if ($kc > 0) { $stop = true; }
-       |    else if ($kc < 0) { $fetchRight(); }
-       |    else {
-       |      ${rTimeVar.code}
-       |      int $tc = 0;
-       |      $tcCheck
-       |      $tcFinal
-       |      if ($tc <= 0) {
-       |        $carryBuf.copyFrom(($unsafeRowCls) $rightRow);
-       |        $carryValid = true;
-       |        $captureCt
-       |        $fetchRight();
-       |      } else { $stop = true; }
-       |    }
-       |  }
-       |  $postLoop
-       |  $numOutput.add(1);
-       |  if ($matchedCond) $numMatched.add(1);
-       |  ${consume(ctx, leftOutVars ++ rightOutVars)}
-       |  if (shouldStop()) return;
-       |}""".stripMargin
-  }
-}
-
-object AsofJoinExec {
-  /** Time column as a double for nearest/tolerance distance arithmetic.
-    * Timestamps are epoch-micros longs internally (~1.7e15 « 2^53, so
-    * the double round-trip is exact — the same unix_micros arithmetic
-    * the window formulation and the DuckDB oracle do in int64);
-    * non-time numerics follow the window formulation's `cast("double")`.
-    */
-  private[plans] def timeAsDouble(dt: DataType): (InternalRow, Int) => Double =
-    dt match {
-      case TimestampType | TimestampNTZType | LongType =>
-        (r, i) => r.getLong(i).toDouble
-      case IntegerType | DateType => (r, i) => r.getInt(i).toDouble
-      case ShortType => (r, i) => r.getShort(i).toDouble
-      case ByteType => (r, i) => r.getByte(i).toDouble
-      case FloatType => (r, i) => r.getFloat(i).toDouble
-      case DoubleType => (r, i) => r.getDouble(i)
-      case other => throw new IllegalArgumentException(
-        s"as-of nearest/tolerance needs a time-or-numeric time column, got $other")
-    }
 }

@@ -9,26 +9,28 @@ import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.types._
 
 /** Broadcast as-of join: the small-dimension-timeline plan shape.
   *
-  * The sort-merge [[AsofJoinExec]] costs one hash shuffle + one sort on
-  * EACH side. When the right side is a small timeline (a rates table, a
+  * A sort-merge as-of join costs one hash shuffle + one sort on EACH
+  * side. When the right side is a small timeline (a rates table, a
   * config history, a model-version log) that is exactly backwards at
   * 100 TB: the big probe side pays a full shuffle + sort to meet a
   * few-thousand-row build side. This exec instead broadcasts the right
   * side once and answers every left row with a per-key binary search —
   * the probe side keeps its partitioning AND ordering (zero exchanges,
   * zero sorts on the plan's big side), the same asymmetry that makes
-  * BroadcastHashJoin the default over SMJ for small builds.
+  * BroadcastHashJoin the default over SMJ for small builds. When the
+  * right side grows with the left, the union+window rewrite
+  * ([[pystreamsspark.operators.AsofJoin]]) is the path instead.
   *
-  * Semantics are byte-identical to [[AsofJoinExec]] / the union+window
-  * formulation — all three directions plus tolerance, the same
-  * deterministic tie rules (backward/forward: greatest tie-break tuple
-  * at the matched time; nearest's forward candidate: smallest), the
-  * same null algebra (null keys group together, null time = -infinity).
-  * NativeAsofSpec drives this exec through the identical adversarial
-  * shapes as the merge exec.
+  * Semantics are byte-identical to the union+window formulation — all
+  * three directions plus tolerance, the same deterministic tie rules
+  * (backward/forward: greatest tie-break tuple at the matched time;
+  * nearest's forward candidate: smallest), the same null algebra (null
+  * keys group together, null time = -infinity). NativeAsofSpec drives
+  * this exec through adversarial shapes against the window form.
   *
   * Build cost per executor: sort the broadcast rows once by (key, time,
   * tie) and index key → range; each probe is then O(log |group|) with
@@ -88,7 +90,7 @@ case class BroadcastAsofJoinExec(
     val rTieExprs = rightTieBreak
     val timeType = leftTime.dataType
     val tGet: (InternalRow, Int) => Double =
-      if (near || tol.isDefined) AsofJoinExec.timeAsDouble(timeType) else null
+      if (near || tol.isDefined) BroadcastAsofJoinExec.timeAsDouble(timeType) else null
 
     val broadcastRows = right.executeBroadcast[Array[InternalRow]]()
     val planId = id
@@ -106,8 +108,7 @@ case class BroadcastAsofJoinExec(
       val idx = BroadcastAsofJoinExec.index(broadcastRows.id, planId, {
         () =>
           val rows = broadcastRows.value
-          // total order (key asc, time asc nulls-first, tie asc) — the
-          // same order the merge exec requires of its sorted right child
+          // total order (key asc, time asc nulls-first, tie asc)
           val buildOrd = GenerateOrdering.generate(
             (rKeyExprs.map(SortOrder(_, Ascending)) ++
               Seq(SortOrder(rTimeExpr, Ascending)) ++
@@ -226,7 +227,7 @@ case class BroadcastAsofJoinExec(
           } else {
             // nearest: backward candidate = last time <= lt (greatest
             // tie); forward candidate = first time > lt (smallest tie)
-            // — identical chooser to the merge exec
+            // — identical chooser to the window formulation
             val backIdx = ub - 1
             val fwdIdx = ub
             val ltNull = lT.isNullAt(0)
@@ -297,4 +298,23 @@ object BroadcastAsofJoinExec {
 
   /** Visible for tests: current number of live cache entries. */
   private[plans] def cacheSize: Int = indexCache.size()
+
+  /** Time column as a double for nearest/tolerance distance arithmetic.
+    * Timestamps are epoch-micros longs internally (~1.7e15 « 2^53, so
+    * the double round-trip is exact — the same unix_micros arithmetic
+    * the window formulation and the DuckDB oracle do in int64);
+    * non-time numerics follow the window formulation's `cast("double")`.
+    */
+  private[plans] def timeAsDouble(dt: DataType): (InternalRow, Int) => Double =
+    dt match {
+      case TimestampType | TimestampNTZType | LongType =>
+        (r, i) => r.getLong(i).toDouble
+      case IntegerType | DateType => (r, i) => r.getInt(i).toDouble
+      case ShortType => (r, i) => r.getShort(i).toDouble
+      case ByteType => (r, i) => r.getByte(i).toDouble
+      case FloatType => (r, i) => r.getFloat(i).toDouble
+      case DoubleType => (r, i) => r.getDouble(i)
+      case other => throw new IllegalArgumentException(
+        s"as-of nearest/tolerance needs a time-or-numeric time column, got $other")
+    }
 }

@@ -330,7 +330,7 @@ object AnalyticsQueries {
     concurrencyByDay(Tables.events(spark, sfDir))
 
   /** The decomposed sweep over any frame with a `ts` column — exposed
-    * so the Stress hot-day probe can run it on amplified/skewed data. */
+    * so it can run on amplified or skewed data, not just the fixture. */
   def concurrencyByDay(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val iv = events

@@ -149,7 +149,7 @@ object GraphQueries {
     // maxHops=4). The distance table is ≤|V| narrow rows, so the
     // per-round checkpoint is cheap and the loop is linear in rounds.
     // LAZY truncate (r15, VERDICT #1): eager checkpointing added one
-    // serial barrier JOB per round (tools/Jobs: 26→22 jobs here) for no
+    // serial barrier JOB per round (tools/JobsDetail: 26→22 jobs here) for no
     // wall gain — the interleaved 3-variant A/B (eager-1 / lazy-1 /
     // eager-2, min-of-10 ×3 blocks) measured all three within host
     // noise, so the policy keeping the fewest driver-sequenced barriers

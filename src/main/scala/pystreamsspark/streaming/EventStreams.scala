@@ -211,7 +211,7 @@ object EventStreams {
     * quote for its key per `direction`, with out-of-order arrivals
     * handled CORRECTLY up to the watermark — the streaming form of
     * [[pystreamsspark.operators.AsofJoin]] /
-    * [[pystreamsspark.plans.AsofJoinExec]], which the batch oracles
+    * [[pystreamsspark.plans.BroadcastAsofJoinExec]], which the batch oracles
     * check; `AsofStreamSpec` proves this stream converges to the batch
     * result under adversarial arrival orders, for every direction ×
     * tolerance combination.

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import pystreamsspark.SparkSpec
 
 /** Laws of the r14 FOOTER-STATS fast path: a clustered write whose
@@ -120,9 +121,10 @@ class FooterStatsSpec extends SparkSpec {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
     }
     def countJobs(f: => Unit): Int = {
+      PlanBridge.drainListenerBus(spark.sparkContext) // earlier jobs' events
       jobs = 0
       spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(1500) } // listener bus is async
+      try { f; PlanBridge.drainListenerBus(spark.sparkContext) }
       finally spark.sparkContext.removeSparkListener(l)
       jobs
     }
@@ -161,9 +163,10 @@ class FooterStatsSpec extends SparkSpec {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
     }
     def countJobs(f: => Unit): Int = {
+      PlanBridge.drainListenerBus(spark.sparkContext) // earlier jobs' events
       jobs = 0
       spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(1500) } // listener bus is async
+      try { f; PlanBridge.drainListenerBus(spark.sparkContext) }
       finally spark.sparkContext.removeSparkListener(l)
       jobs
     }

@@ -81,6 +81,29 @@ class SnapshotCdcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.head.getAs[String]("band") === "B1")
   }
 
+  test("changesBetween keeps data columns named like its working columns") {
+    import spark.implicits._
+    val dir = freshDir()
+    val rows = (0 until 50).map(i => (i.toLong, i * 3L, s"d_$i", i % 7L))
+    SnapshotTable.create(spark, dir, rows.toDF("id", "__w", "__d", "__r"),
+      numFiles = 2)
+    SnapshotTable.merge(spark, dir,
+      Seq((5L, 999L, "upd_5", 1L), (100L, 7L, "new_100", 2L))
+        .toDF("id", "__w", "__d", "__r"), Seq("id"))
+    val got = SnapshotTable.changesBetween(spark, dir, 1, 2)
+    assert(got.columns.toSeq === Seq("id", "__w", "__d", "__r", "_change_type"))
+    val v1 = SnapshotTable.read(spark, dir, Some(1))
+    val v2 = SnapshotTable.read(spark, dir, Some(2))
+    val brute = v2.exceptAll(v1).withColumn("_change_type", lit("insert"))
+      .unionByName(v1.exceptAll(v2).withColumn("_change_type", lit("delete")))
+    def rowsOf(df: DataFrame) = df.select(got.columns.map(col).toSeq: _*)
+      .collect().map(_.toSeq).toSet
+    assert(rowsOf(got) === rowsOf(brute))
+    assert(rowsOf(got) === Set(
+      Seq(5L, 15L, "d_5", 5L, "delete"), Seq(5L, 999L, "upd_5", 1L, "insert"),
+      Seq(100L, 7L, "new_100", 2L, "insert")))
+  }
+
   test("versionAt resolves the latest commit at-or-before the time") {
     val dir = freshDir()
     SnapshotTable.create(spark, dir, seed(10), numFiles = 1) // v1

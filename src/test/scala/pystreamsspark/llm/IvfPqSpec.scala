@@ -67,8 +67,8 @@ class IvfPqSpec extends SparkSpec {
       pystreamsspark.io.SnapshotTable.filePaths(s"$dir/$sub")
         .map(p => java.nio.file.Files.size(java.nio.file.Paths.get(p))).sum
     // at this toy scale parquet framing dominates — the honest ratio
-    // (~10x at sf0.1's 64-d corpus) is measured by the Stress ivf_pq
-    // row; here assert the direction only
+    // (7.8x on a ×10 copy of sf0.1's 64-d corpus) is recorded in
+    // SCALE.md; here assert the direction only
     val raw = bytes("cells"); val codes = bytes("pq_codes")
     assert(codes < raw,
       s"codes table must compress the corpus: $codes vs raw $raw")

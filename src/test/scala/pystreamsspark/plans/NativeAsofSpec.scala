@@ -9,11 +9,11 @@ import pystreamsspark.io.Tables
 import pystreamsspark.operators.{AsofJoin, NativeAsof}
 
 /** The native as-of join operator (AsofJoinPlan → AsofJoinStrategy →
-  * AsofJoinExec) must be byte-identical to the union+window formulation
-  * on every input shape — ties on (key, time), duplicate right rows,
-  * keys missing on either side, null times — and its physical plan must
-  * be the sort-merge shape: the custom exec node, no Window, and one
-  * exchange per side.
+  * BroadcastAsofJoinExec) must be byte-identical to the union+window
+  * formulation on every input shape — ties on (key, time), duplicate
+  * right rows, keys missing on either side, null times — and its
+  * physical plan must be the broadcast shape: the custom exec node, one
+  * broadcast exchange, and no shuffle or sort on the probe side.
   */
 class NativeAsofSpec extends SparkSpec {
 
@@ -59,18 +59,6 @@ class NativeAsofSpec extends SparkSpec {
   test("nearest on events matches the window formulation") {
     val (native, window) = eventsAsof("nearest")
     sameResult(native, window)
-  }
-
-  test("physical plan is the custom exec: no Window, one exchange per side") {
-    val (native, _) = eventsAsof("backward")
-    native.collect()
-    val plan = finalPlan(native.queryExecution.executedPlan).toString
-    assert(plan.contains("AsofJoin"), s"native exec missing from plan:\n$plan")
-    assert(!plan.contains("Window"), s"window op leaked into native plan:\n$plan")
-    // top-level orderBy adds one range exchange; the join itself must
-    // add exactly two hash exchanges (one per side), like SMJ
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 2, s"expected 2 hash exchanges, got $exchanges:\n$plan")
   }
 
   /** left: 400 probes over 12 keys (keys 10/11 absent on the right),
@@ -149,58 +137,14 @@ class NativeAsofSpec extends SparkSpec {
     assert(tied.forall(r => r.getDouble(r.fieldIndex("asof_v1")) == 60.0))
   }
 
-  test("merge loop compiles under whole-stage codegen AND the interpreted path agrees") {
-    val s = spark
-    // fallback=false turns a silent codegen-compile failure into a hard
-    // error, so this test cannot pass on the interpreted fallback
-    s.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      for (direction <- Seq("backward", "nearest")) {
-        val (native, window) = eventsAsof(direction)
-        sameResult(native, window)
-        // AQE wraps stages in leaf QueryStageExec nodes, so assert on the
-        // plan string: a codegen'd node prints with the `*(stageId)` prefix
-        val plan = finalPlan(native.queryExecution.executedPlan).toString
-        assert("""\*\(\d+\) AsofJoin""".r.findFirstIn(plan).nonEmpty,
-          s"$direction AsofJoinExec not fused into a codegen stage:\n$plan")
-      }
-      // tolerance mode must also compile (distance cutoff in the stage)
-      import s.implicits._
-      val ev = pystreamsspark.io.Tables.events(s, sf)
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
-      val tol = NativeAsof.asofJoin(
-          ev.select($"event_id", $"user_id", $"ts"), purchases,
-          Seq("user_id"), "ts", "ts", Seq("value"),
-          tolerance = Some(900000000.0))
-        .orderBy($"event_id")
-      val tolWin = AsofJoin.asofJoin(
-          ev.select($"event_id", $"user_id", $"ts"), purchases,
-          Seq("user_id"), "ts", "ts", Seq("value"),
-          tolerance = Some(900000000.0))
-        .orderBy($"event_id")
-      sameResult(tol, tolWin)
-    } finally s.conf.unset("spark.sql.codegen.fallback")
-    // the interpreted doExecute is the executable specification the
-    // generated code must match — run it explicitly
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val (native, window) = eventsAsof("forward")
-      sameResult(native, window)
-    } finally s.conf.unset("spark.sql.codegen.wholeStage")
-  }
-
   test("every left row survives when the right side is empty") {
     val s = spark
     import s.implicits._
     val left = Seq((1L, 1L, 1L), (2L, 1L, 2L)).toDF("id", "k", "t")
     val right = Seq.empty[(Long, Long, Double)].toDF("k", "t", "v")
-    for (bcast <- Seq(false, true)) {
-      val out = NativeAsof.asofJoin(left, right, Seq("k"), "t", "t", Seq("v"),
-          broadcast = bcast)
-        .orderBy($"id").collect()
-      assert(out.length == 2 && out.forall(_.isNullAt(3)), s"broadcast=$bcast")
-    }
+    val out = NativeAsof.asofJoin(left, right, Seq("k"), "t", "t", Seq("v"))
+      .orderBy($"id").collect()
+    assert(out.length == 2 && out.forall(_.isNullAt(3)))
   }
 
   test("broadcast variant matches the window formulation: every direction × tolerance") {
@@ -210,7 +154,7 @@ class NativeAsofSpec extends SparkSpec {
     for (direction <- Seq("backward", "forward", "nearest");
          tol <- Seq(None, Some(4.0))) {
       val native = NativeAsof.asofJoin(left, right, Seq("k"), "t", "t",
-          Seq("v"), direction = direction, tolerance = tol, broadcast = true)
+          Seq("v"), direction = direction, tolerance = tol)
         .orderBy($"probe_id")
       val window = AsofJoin.asofJoin(left, right, Seq("k"), "t", "t",
           Seq("v"), direction = direction, tolerance = tol)
@@ -236,7 +180,7 @@ class NativeAsofSpec extends SparkSpec {
     ).toDF("k1", "k2", "t", "v")
     for (direction <- Seq("backward", "forward", "nearest")) {
       val native = NativeAsof.asofJoin(left, right, Seq("k1", "k2"),
-          "t", "t", Seq("v"), direction = direction, broadcast = true)
+          "t", "t", Seq("v"), direction = direction)
         .orderBy($"probe_id")
       val window = AsofJoin.asofJoin(left, right, Seq("k1", "k2"),
           "t", "t", Seq("v"), direction = direction)
@@ -257,11 +201,9 @@ class NativeAsofSpec extends SparkSpec {
     // ONCE and reuse it; the executor-side index memo must then key on
     // (broadcast id, plan id) so the two execs cannot collide
     val back = NativeAsof.asofJoin(left, purchases, Seq("user_id"),
-      "ts", "ts", Seq("value"), prefix = "back_", direction = "backward",
-      broadcast = true)
+      "ts", "ts", Seq("value"), prefix = "back_", direction = "backward")
     val fwd = NativeAsof.asofJoin(left, purchases, Seq("user_id"),
-      "ts", "ts", Seq("value"), prefix = "fwd_", direction = "forward",
-      broadcast = true)
+      "ts", "ts", Seq("value"), prefix = "fwd_", direction = "forward")
     val q = back.join(fwd.select($"event_id".as("e2"), $"fwd_value"),
         $"event_id" === $"e2")
       .select($"event_id", $"user_id", $"ts", $"back_value", $"fwd_value")
@@ -342,7 +284,7 @@ class NativeAsofSpec extends SparkSpec {
       .select($"user_id", $"ts", $"value")
     val q = NativeAsof.asofJoin(
       ev.select($"event_id", $"user_id", $"ts"), purchases,
-      Seq("user_id"), "ts", "ts", Seq("value"), broadcast = true)
+      Seq("user_id"), "ts", "ts", Seq("value"))
     q.collect()
     val plan = finalPlan(q.queryExecution.executedPlan).toString
     assert(plan.contains("BroadcastAsofJoin"), s"exec missing:\n$plan")
